@@ -341,8 +341,9 @@ final class QueryServer(engine: Engine, port: Int = 0) {
         "a 'sample' route takes exactly one store and no 'raw' — the " +
           "sample tier IS the fine-zoom source")
       case (None, Some(r), Seq(one)) =>
-        RollupStore.route(spark, one, spark.read.parquet(r), since, until,
-          maxPoints, valueCol, tsCol, distinctCol, 12, hist, keyFilter)
+        RollupStore.route(spark, one,
+          graft.storage.MetaMemo.read(spark, r, mergeSchema = false), since,
+          until, maxPoints, valueCol, tsCol, distinctCol, 12, hist, keyFilter)
       case (None, Some(r), many) =>
         RollupStore.routeCascade(spark, r, many, since, until, maxPoints,
           valueCol, tsCol, distinctCol, 12, hist, keyFilter)

@@ -1,9 +1,11 @@
 package graft.storage
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Parquet-backed metrics catalog.
   *
@@ -25,19 +27,25 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Runtime confs every session needs before reading metrics tables. */
-  def configure(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Runtime confs every session needs before reading metrics tables. A
+    * conf the session already set (at build time or by the user) wins;
+    * only `SPARK_GRAFT_AQE_MIN_PARTITION_SIZE` in `env` overrides its key. */
+  def configure(spark: SparkSession,
+      env: Map[String, String] = sys.env): Unit = {
+    val set = spark.conf.getAll
+    def default(key: String, value: String): Unit =
+      if (!set.contains(key)) spark.conf.set(key, value)
+    default("spark.sql.legacy.parquet.nanosAsLong", "true")
     // read parquet timestamp[us] isAdjustedToUTC=false as TimestampType
     // (not TIMESTAMP_NTZ): under the UTC session pin below the instant is
     // identical, TimestampType comparisons push down to parquet stats, and
     // normalizeTs needs no per-type cast
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    default("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     // min/max/count meta-queries answered from parquet footers
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    default("spark.sql.parquet.aggregatePushdown", "true")
     // the engine's time model is UTC epoch-nanos; pin the session so no
     // date/timestamp rendering ever depends on the host timezone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    default("spark.sql.session.timeZone", "UTC")
     // predicates over normalizeTs output fold back to native scan filters
     graft.plans.NanoTsRewrite.install(spark)
     // SCALE-ADAPTIVE post-shuffle parallelism (optimization guide §2.2):
@@ -53,8 +61,9 @@ object Tables {
     // how small inputs spread over idle cores, which is exactly the
     // dimension that must adapt between a laptop bench and a 100 TB
     // cluster. Env-overridable, same contract as the fanOut guard.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+    val minPart = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    env.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE")
+      .fold(default(minPart, "64k"))(spark.conf.set(minPart, _))
   }
 
   /** Hadoop conf for catalog path operations — from the active session when
@@ -101,14 +110,9 @@ object Tables {
       case _ => df
     }
 
-  def read(spark: SparkSession, dbDir: String, metrics: String): DataFrame = {
-    configure(spark)
-    val df = normalizeTs(spark.read.parquet(metricsPath(dbDir, metrics)))
-    // drop writer partition columns (date bucketing) from the logical schema
-    if (df.columns.contains(WritableStore.PartitionCol))
-      df.drop(WritableStore.PartitionCol)
-    else df
-  }
+  /** The whole table, writer partition columns (date bucketing) dropped. */
+  def read(spark: SparkSession, dbDir: String, metrics: String): DataFrame =
+    readRange(spark, dbDir, metrics, None, None)
 
   /** Range-aware read: applies the `[since, until)` ts predicate AND, for
     * date-bucketed tables, the equivalent predicate on the `__day` partition
@@ -118,7 +122,8 @@ object Tables {
   def readRange(spark: SparkSession, dbDir: String, metrics: String,
       since: Option[Long], until: Option[Long]): DataFrame = {
     configure(spark)
-    val raw = normalizeTs(spark.read.parquet(metricsPath(dbDir, metrics)))
+    val raw = normalizeTs(
+      MetaMemo.read(spark, metricsPath(dbDir, metrics), mergeSchema = false))
     def dayStr(nanos: Long): String =
       java.time.LocalDate.ofEpochDay(
         Math.floorDiv(nanos, 86400L * 1000000000L)).toString
@@ -176,37 +181,35 @@ object Tables {
     }.distinct.sorted
   }
 
-  def metricsDf(spark: SparkSession, dbDir: String): DataFrame = {
-    import spark.implicits._
-    listMetrics(dbDir).toDF("metrics")
+  def metricsDf(spark: SparkSession, dbDir: String): DataFrame =
+    metaFrame(spark, listMetrics(dbDir).map(Tuple1(_)),
+      ("metrics", StringType, true))
+
+  /** Meta-table rows as a frame with an explicit schema — no reflection
+    * encoder derived per request. `Option` cells become nulls. */
+  private def metaFrame(spark: SparkSession, rows: Seq[Product],
+      cols: (String, DataType, Boolean)*): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      rows.map(r => Row.fromSeq(r.productIterator.map {
+        case o: Option[_] => o.getOrElse(null)
+        case v => v
+      }.toSeq)).asJava,
+      StructType(cols.map { case (n, t, nullable) =>
+        StructField(n, t, nullable) }))
   }
 
-  /** `.describe`: per metrics — row count and ts range (`.describe` builds
-    * updated_at/block_num/from/end from block metadata,
-    * `query/executor/describe_metrics.rs:9-113`). With aggregate pushdown the
-    * min/max/count run footer-only.
-    */
-  /** One data file ("block"): qualified path + modification time (ms). */
-  private final case class DataFile(path: HPath, mtimeMs: Long) {
-    def name: String = path.getName
-  }
-
-  /** Data files + mtimes for a metrics — `.describe`'s
+  /** Data files ("blocks") of a metrics — `.describe`'s
     * updated_at/block_num (reference block metadata,
-    * `describe_metrics.rs:95-112`). Recursive remote listing, so
+    * `describe_metrics.rs:95-112`). Recursive walk ([[MetaMemo.walk]]), so
     * date-bucketed layouts and object-store prefixes both walk the same
     * way. */
-  private def dataFiles(dbDir: String, metrics: String): Seq[DataFile] = {
+  private def dataFiles(dbDir: String, metrics: String): Seq[FileStatus] = {
     val root = new HPath(metricsPath(dbDir, metrics))
-    val it = fsFor(root).listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
-    while (it.hasNext) {
-      val st = it.next()
+    MetaMemo.walk(fsFor(root), root).filter { st =>
       val name = st.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_"))
-        out += DataFile(st.getPath, st.getModificationTime)
+      name.endsWith(".parquet") && !name.startsWith("_")
     }
-    out.toSeq
   }
 
   /** Per-file footer stats: (file, rows, ts min, ts max) read driver-side
@@ -216,67 +219,67 @@ object Tables {
     * Spark analog is footer row-group statistics, never touching data
     * pages). Metadata queries therefore cost zero data IO at any scale.
     */
-  private def footerStats(spark: SparkSession, files: Seq[DataFile])
-      : Seq[(DataFile, Long, Option[Long], Option[Long])] = {
+  private def footerStats(spark: SparkSession, files: Seq[FileStatus])
+      : Seq[(FileStatus, Long, Option[Long], Option[Long])] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
+    val readFooter = MetaMemo.footers(spark.sessionState.newHadoopConf())
     files.map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(f.path, conf))
-      try {
-        val footer = reader.getFooter
-        val blocks = footer.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val tsField = footer.getFileMetaData.getSchema.getFields.asScala
-          .find(_.getName == "ts")
-        // stats carry the column's PHYSICAL int64 in its own unit: engine
-        // blocks store ns longs (scale 1), external timestamp[us]/[ms]
-        // annotations scale to the ns the describe/block_list contract
-        // reports — same normalization as [[Tables.normalizeTs]], footer-side
-        val nsScale: Long = tsField.flatMap { f =>
-          import org.apache.parquet.schema.LogicalTypeAnnotation
-          Option(f.asPrimitiveType().getLogicalTypeAnnotation).collect {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
-                case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
-                case _ => 1L
-              }
-          }
-        }.getOrElse(1L)
-        val tsStats =
-          if (tsField.isEmpty) Nil
-          else blocks.flatMap { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == "ts")
-              .map(_.getStatistics)
-              .filter(st => st != null && st.hasNonNullValue)
-              .map(st =>
-                (st.genericGetMin.asInstanceOf[Number].longValue() * nsScale,
-                  st.genericGetMax.asInstanceOf[Number].longValue() * nsScale))
-          }
-        (f, rows, tsStats.map(_._1).minOption, tsStats.map(_._2).maxOption)
-      } finally reader.close()
+      val footer = readFooter(f)
+      val blocks = footer.getBlocks.asScala.toSeq
+      val rows = blocks.map(_.getRowCount).sum
+      val tsField = footer.getFileMetaData.getSchema.getFields.asScala
+        .find(_.getName == "ts")
+      // stats carry the column's PHYSICAL int64 in its own unit: engine
+      // blocks store ns longs (scale 1), external timestamp[us]/[ms]
+      // annotations scale to the ns the describe/block_list contract
+      // reports — same normalization as [[Tables.normalizeTs]], footer-side
+      val nsScale: Long = tsField.flatMap { f =>
+        import org.apache.parquet.schema.LogicalTypeAnnotation
+        Option(f.asPrimitiveType().getLogicalTypeAnnotation).collect {
+          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            t.getUnit match {
+              case LogicalTypeAnnotation.TimeUnit.MICROS => 1000L
+              case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000000L
+              case _ => 1L
+            }
+        }
+      }.getOrElse(1L)
+      val tsStats =
+        if (tsField.isEmpty) Nil
+        else blocks.flatMap { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "ts")
+            .map(_.getStatistics)
+            .filter(st => st != null && st.hasNonNullValue)
+            .map(st =>
+              (st.genericGetMin.asInstanceOf[Number].longValue() * nsScale,
+                st.genericGetMax.asInstanceOf[Number].longValue() * nsScale))
+        }
+      (f, rows, tsStats.map(_._1).minOption, tsStats.map(_._2).maxOption)
     }
   }
 
+  /** `.describe`: per metrics — row count and ts range (`.describe` builds
+    * updated_at/block_num/from/end from block metadata,
+    * `query/executor/describe_metrics.rs:9-113`), footer-only (see
+    * [[footerStats]]). */
   def describeDf(spark: SparkSession, dbDir: String,
       metricsFilter: Option[String]): DataFrame = {
     configure(spark)
-    import spark.implicits._
     val names = metricsFilter.fold(listMetrics(dbDir))(m => Seq(m))
     val rows = names.map { m =>
       val files = dataFiles(dbDir, m)
-      val updatedAt = files.map(_.mtimeMs).maxOption.getOrElse(0L) * 1000000L
+      val updatedAt =
+        files.map(_.getModificationTime).maxOption.getOrElse(0L) * 1000000L
       val stats = footerStats(spark, files)
       val rowNum = stats.map(_._2).sum
       val fromTs = stats.flatMap(_._3).minOption
       val endTs = stats.flatMap(_._4).maxOption
       (m, updatedAt, files.length.toLong, rowNum, fromTs, endTs)
     }
-    rows.toDF("metrics", "updated_at", "block_num", "row_num", "from_ts",
-      "end_ts").orderBy("metrics")
+    metaFrame(spark, rows, ("metrics", StringType, true),
+      ("updated_at", LongType, false), ("block_num", LongType, false),
+      ("row_num", LongType, false), ("from_ts", LongType, true),
+      ("end_ts", LongType, true)).orderBy("metrics")
   }
 
   /** `.block_list`: one row per parquet data file ("block"), with its ts
@@ -287,7 +290,6 @@ object Tables {
   def blockListDf(spark: SparkSession, dbDir: String,
       metricsFilter: Option[String]): DataFrame = {
     configure(spark)
-    import spark.implicits._
     val names = metricsFilter.fold(listMetrics(dbDir))(m => Seq(m))
     val rows = names.flatMap { m =>
       val withTs = footerStats(spark, dataFiles(dbDir, m)).collect {
@@ -295,12 +297,14 @@ object Tables {
         case (f, rows, Some(start), Some(end)) if rows > 0 =>
           (f, rows, start, end)
       }
-      withTs.sortBy { case (f, _, start, _) => (start, f.path.toString) }
+      withTs.sortBy { case (f, _, start, _) => (start, f.getPath.toString) }
         .zipWithIndex.map { case ((f, rowNum, start, end), i) =>
-          (m, f.mtimeMs * 1000000L, i + 1, rowNum, start, end)
+          (m, f.getModificationTime * 1000000L, i + 1, rowNum, start, end)
         }
     }
-    rows.toDF("metrics", "updated_at", "seq", "row_num", "block_start",
-      "block_end").orderBy("metrics", "seq")
+    metaFrame(spark, rows, ("metrics", StringType, true),
+      ("updated_at", LongType, false), ("seq", IntegerType, false),
+      ("row_num", LongType, false), ("block_start", LongType, false),
+      ("block_end", LongType, false)).orderBy("metrics", "seq")
   }
 }

@@ -628,7 +628,7 @@ object RollupStore {
     graft.pipeline.Similarity.recoverCompact(fs, live) // crashed swap too
     val stored0 = checkedRead(spark, path)
     // width + horizon in one metadata job (see storeMetaProbe)
-    val (bucketNs, horizon) = storeMetaProbe(stored0, path)
+    val (bucketNs, horizon) = storeMetaProbe(spark, stored0, path)
     keyFilter.foreach(requireKeyPredicate(_, stored0, "route"))
     val stored = keyFilter.fold(stored0)(stored0.filter)
     val rawF = keyFilter.fold(raw)(raw.filter)
@@ -760,7 +760,7 @@ object RollupStore {
     graft.pipeline.Similarity.recoverCompact(fs, live)
     val stored = checkedRead(spark, storePath)
     // width + horizon in one metadata job (see storeMetaProbe)
-    val (bucketNs, horizon) = storeMetaProbe(stored, storePath)
+    val (bucketNs, horizon) = storeMetaProbe(spark, stored, storePath)
     val keys = keyColsOf(stored)
     require(horizon.isEmpty,
       "routeSampled serves a complete-mirror store — this store has a " +
@@ -1158,9 +1158,10 @@ object RollupStore {
     * separate driver-blocking jobs over the same KB store frame doubled
     * the per-request metadata cost (guide §1: the routed rows' time is
     * job count, not bytes). Same failure surface as [[storeBucketNs]] +
-    * [[tierHorizon]]: empty and mixed-width stores fail identically. */
-  private def storeMetaProbe(stored: DataFrame, path: String)
-      : (Long, Option[Long]) = {
+    * [[tierHorizon]]: empty and mixed-width stores fail identically. The
+    * job reruns only when the store's files changed ([[MetaMemo.probe]]). */
+  private def storeMetaProbe(spark: SparkSession, stored: DataFrame,
+      path: String): (Long, Option[Long]) = MetaMemo.probe(spark, path) {
     val r = stored.agg(collect_set(col("bucket_ns")), max(horizonExpr))
       .head()
     val widths = r.getSeq[Long](0).sorted
@@ -1638,7 +1639,7 @@ object RollupStore {
     * every later distinct estimate undercount the streamed buckets.
     */
   private def checkedRead(spark: SparkSession, path: String): DataFrame =
-    guardMixedDims(spark.read.option("mergeSchema", "true").parquet(path))
+    guardMixedDims(MetaMemo.read(spark, path, mergeSchema = true))
 
   private def guardMixedDims(df: DataFrame): DataFrame =
     Seq("hll" -> "distinctCol", "hcnt" -> "histBoundsCents",
@@ -1658,11 +1659,8 @@ object RollupStore {
     * rewords the error is a one-line fix, not a silent no-op in three. */
   private def readTreeOrNone(spark: SparkSession, path: String,
       mergeSchema: Boolean = false): Option[DataFrame] =
-    try {
-      val r = spark.read
-      Some((if (mergeSchema) r.option("mergeSchema", "true") else r)
-        .parquet(path))
-    } catch {
+    try Some(MetaMemo.read(spark, path, mergeSchema))
+    catch {
       case e: org.apache.spark.sql.AnalysisException
           if e.getMessage.toLowerCase.contains("schema") ||
             e.getMessage.toLowerCase.contains("path does not exist") => None

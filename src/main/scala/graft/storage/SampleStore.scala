@@ -291,8 +291,6 @@ object SampleStore {
     // unstamped sibling. Footer-only reads (no row groups, no data
     // pages); early exit on the first unstamped file; absent/empty
     // trees pass — the caller's own validation or write decides those.
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(conf)
@@ -300,17 +298,15 @@ object SampleStore {
     val files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(live,
         s"${WritableStore.PartitionCol}=*/*")))
       .getOrElse(Array.empty)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    val readFooter = MetaMemo.footers(conf)
     val unstamped = files.iterator.find { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try !reader.getFooter.getFileMetaData.getSchema
-        .containsField("layout_version")
-      finally reader.close()
+      !readFooter(f).getFileMetaData.getSchema.containsField("layout_version")
     }
     unstamped.foreach { f =>
       throw new IllegalStateException(
         s"$context: sample store at $path holds a legacy " +
-          s"(pre-v$LayoutVersion) file ${f.getName} — run " +
+          s"(pre-v$LayoutVersion) file ${f.getPath.getName} — run " +
           "SampleStore.compact(...) once to upgrade the at-rest tree; " +
           "appending stamped rows beside an unstamped file would give " +
           "the store per-file schemas " +
